@@ -17,8 +17,9 @@ Shape parity with a real plugin:
   source (node_id, kind, payload JSON, cloud, account, region) and the
   same ``flatten_graph`` catalog flatten as the example source.
 - edges are DERIVED from node payloads with DataFrame ops (explode of the
-  instance's ``volume_ids``), not a second fetch — at 1000 executors the
-  attachment edges come out of the same scan that produced the nodes.
+  instance's ``volume_ids``) over the returned ``nodes`` frame, which
+  ``pipeline.collect`` persists — so the attachment edges read the same
+  held rows as the kind tables, and the API is swept once per run.
 
 Determinism: every count and attribute derives from md5 of the
 (account, region, index) tuple, so golden-count tests are exact and
@@ -221,8 +222,10 @@ def collect_aws_mock(
     )
     nodes = acct_nodes.unionByName(fetched)
 
-    # Edges derived from the fetched nodes — no second API sweep.
-    region_nodes = fetched.filter(F.col("kind") == "aws_region")
+    # Edges derive from the returned ``nodes`` frame, never from ``fetched``:
+    # the pipeline persists ``nodes``, so edges read its held rows and the
+    # API is swept once per run (a plan over ``fetched`` would re-fetch).
+    region_nodes = nodes.filter(F.col("kind") == "aws_region")
     acct_region = region_nodes.select(
         F.col("account").alias("from_id"),
         F.col("node_id").alias("to_id"),
@@ -230,7 +233,7 @@ def collect_aws_mock(
         F.lit("aws_region").alias("to_kind"),
     )
     region_child = (
-        fetched.filter(F.col("kind").isin("aws_ec2_instance", "aws_ebs_volume"))
+        nodes.filter(F.col("kind").isin("aws_ec2_instance", "aws_ebs_volume"))
         .select(
             F.concat_ws("/", "account", "region").alias("from_id"),
             F.col("node_id").alias("to_id"),
@@ -239,7 +242,7 @@ def collect_aws_mock(
         )
     )
     inst_vol = (
-        fetched.filter(F.col("kind") == "aws_ec2_instance")
+        nodes.filter(F.col("kind") == "aws_ec2_instance")
         .select(
             F.col("node_id").alias("from_id"),
             F.explode(

@@ -189,7 +189,10 @@ def collect_do_mock(
     )
     nodes = team_nodes.unionByName(fetched)
 
-    region_nodes = fetched.filter(F.col("kind") == "digitalocean_region")
+    # Edges derive from the returned ``nodes`` frame, never from ``fetched``:
+    # the pipeline persists ``nodes``, so edges read its held rows and the
+    # API is swept once per run (a plan over ``fetched`` would re-fetch).
+    region_nodes = nodes.filter(F.col("kind") == "digitalocean_region")
     team_region = region_nodes.select(
         F.col("account").alias("from_id"),
         F.col("node_id").alias("to_id"),
@@ -198,7 +201,7 @@ def collect_do_mock(
     )
 
     def region_child(kind: str) -> DataFrame:
-        return fetched.filter(F.col("kind") == kind).select(
+        return nodes.filter(F.col("kind") == kind).select(
             F.concat_ws("/", "account", "region").alias("from_id"),
             F.col("node_id").alias("to_id"),
             F.lit("digitalocean_region").alias("from_kind"),
@@ -207,7 +210,7 @@ def collect_do_mock(
 
     # the optional sibling edge: only volumes with a non-null attachment
     drop_vol = (
-        fetched.filter(F.col("kind") == "digitalocean_volume")
+        nodes.filter(F.col("kind") == "digitalocean_volume")
         .select(
             F.from_json("payload", "attached_droplet STRING")[
                 "attached_droplet"

@@ -193,27 +193,30 @@ def collect_gcp_mock(
     )
     nodes = proj_nodes.unionByName(fetched)
 
-    zone_nodes = fetched.filter(F.col("kind") == "gcp_zone")
+    # Edges derive from the returned ``nodes`` frame, never from ``fetched``:
+    # the pipeline persists ``nodes``, so edges read its held rows and the
+    # API is swept once per run (a plan over ``fetched`` would re-fetch).
+    zone_nodes = nodes.filter(F.col("kind") == "gcp_zone")
     proj_zone = zone_nodes.select(
         F.col("account").alias("from_id"),
         F.col("node_id").alias("to_id"),
         F.lit("gcp_project").alias("from_kind"),
         F.lit("gcp_zone").alias("to_kind"),
     )
-    zone_inst = fetched.filter(F.col("kind") == "gcp_gce_instance").select(
+    zone_inst = nodes.filter(F.col("kind") == "gcp_gce_instance").select(
         F.concat_ws("/", "account", "region").alias("from_id"),
         F.col("node_id").alias("to_id"),
         F.lit("gcp_zone").alias("from_kind"),
         F.lit("gcp_gce_instance").alias("to_kind"),
     )
-    proj_bucket = fetched.filter(F.col("kind") == "gcp_gcs_bucket").select(
+    proj_bucket = nodes.filter(F.col("kind") == "gcp_gcs_bucket").select(
         F.col("account").alias("from_id"),
         F.col("node_id").alias("to_id"),
         F.lit("gcp_project").alias("from_kind"),
         F.lit("gcp_gcs_bucket").alias("to_kind"),
     )
     inst_bucket = (
-        fetched.filter(F.col("kind") == "gcp_gce_instance")
+        nodes.filter(F.col("kind") == "gcp_gce_instance")
         .select(
             F.col("node_id").alias("from_id"),
             F.from_json("payload", "logs_bucket STRING")["logs_bucket"].alias(

@@ -210,8 +210,10 @@ def collect_k8s_mock(
     )
     nodes = cluster_nodes.unionByName(fetched)
 
-    # Edges derived from the fetched nodes — no second API sweep.
-    ns_nodes = fetched.filter(F.col("kind") == "k8s_namespace")
+    # Edges derive from the returned ``nodes`` frame, never from ``fetched``:
+    # the pipeline persists ``nodes``, so edges read its held rows and the
+    # API is swept once per run (a plan over ``fetched`` would re-fetch).
+    ns_nodes = nodes.filter(F.col("kind") == "k8s_namespace")
     cluster_ns = ns_nodes.select(
         F.col("account").alias("from_id"),
         F.col("node_id").alias("to_id"),
@@ -219,7 +221,7 @@ def collect_k8s_mock(
         F.lit("k8s_namespace").alias("to_kind"),
     )
     ns_child = (
-        fetched.filter(F.col("kind").isin("k8s_pod", "k8s_config_map"))
+        nodes.filter(F.col("kind").isin("k8s_pod", "k8s_config_map"))
         .select(
             F.concat_ws("/", "account", "region").alias("from_id"),
             F.col("node_id").alias("to_id"),
@@ -232,7 +234,7 @@ def collect_k8s_mock(
     # reference against the namespace's config_map nodes (name + scope
     # equality — a keyed join, no driver lookup).
     pod_refs = (
-        fetched.filter(F.col("kind") == "k8s_pod")
+        nodes.filter(F.col("kind") == "k8s_pod")
         .select(
             F.col("node_id").alias("from_id"),
             F.col("account").alias("p_account"),
@@ -244,7 +246,7 @@ def collect_k8s_mock(
             ).alias("p_cm_name"),
         )
     )
-    cm_nodes = fetched.filter(F.col("kind") == "k8s_config_map").select(
+    cm_nodes = nodes.filter(F.col("kind") == "k8s_config_map").select(
         F.col("node_id").alias("to_id"),
         F.get_json_object("payload", "$.name").alias("cm_name"),
         F.col("account").alias("cm_account"),

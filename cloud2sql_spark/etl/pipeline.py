@@ -2,6 +2,17 @@
 cloud2sql/collect.py:154-214): run sources -> flatten -> load destinations
 -> atomic snapshot promote; fail-fast with no partial promote.
 
+Snapshot guarantee: every source's API is swept once per run. The
+pipeline persists each source's ``nodes`` and ``edges`` frames
+(``MEMORY_AND_DISK``) and materializes ``nodes`` with a single action
+before flattening, so every kind table, link table and row count reads
+those held rows; the reference's fetch-once-then-flatten shape
+(collect.py:198-203). The frames stay held until promote and are
+released on success and on failure alike. Row counts come from the load
+itself (an ``Observation`` on the written frame), not a second action.
+Caveat: losing an executor drops its cached blocks, and Spark recomputes
+(so re-fetches) only those lost partitions.
+
 Parallelism mapping (reference A15/A16 -> Spark):
 
 - inter-source: the reference runs 4 collector threads (collect.py:186);
@@ -16,10 +27,13 @@ Parallelism mapping (reference A15/A16 -> Spark):
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from cloud2sql_spark.etl import sinks
 from cloud2sql_spark.etl.config import FileDestination, JdbcDestination
@@ -186,26 +200,44 @@ def collect(
     # starve the others; under FIFO the tag is inert. Any source failure
     # propagates BEFORE staging starts, so fail-fast-no-promote (A19) is
     # preserved exactly.
-    tables: dict[str, DataFrame] = {}
-    with ThreadPoolExecutor(max_workers=min(4, len(names))) as pool:
-        futures = {
-            name: pool.submit(
-                _run_source,
-                spark,
-                name,
-                sources[name],
-                config["sources"].get(name),
-                fb,
-            )
-            for name in names
-        }
-        # deterministic merge order (raises the first failure here, with
-        # every other future drained by the with-block's shutdown)
-        for name in names:
-            tables.update(futures[name].result())
+    persisted: list[DataFrame] = []
+    try:
+        tables: dict[str, DataFrame] = {}
+        with ThreadPoolExecutor(max_workers=min(4, len(names))) as pool:
+            futures = {
+                name: pool.submit(
+                    _run_source,
+                    spark,
+                    name,
+                    sources[name],
+                    config["sources"].get(name),
+                    persisted,
+                    fb,
+                )
+                for name in names
+            }
+            # deterministic merge order (raises the first failure here,
+            # with every other future drained by the with-block's shutdown)
+            for name in names:
+                tables.update(futures[name].result())
+        return _load(spark, tables, destination, fb)
+    finally:
+        # the snapshot is held until promote; release it on every path
+        # (dependents before the frames they read from)
+        for df in reversed(persisted):
+            df.unpersist()
 
-    counts: dict[str, int] = {}
-    if isinstance(destination, JdbcDestination):
+
+def _load(
+    spark: SparkSession,
+    tables: dict[str, DataFrame],
+    destination: FileDestination | JdbcDestination,
+    fb: "ProgressReporter",
+) -> dict[str, int]:
+    """Write every table, counting its rows during the write, then (JDBC)
+    promote the staged snapshot."""
+    jdbc = isinstance(destination, JdbcDestination)
+    if jdbc:
         # fail fast with an install hint if the dialect's JDBC driver is
         # absent (reference check_db_driver, util.py:70-87)
         from cloud2sql_spark.etl.dialects import check_jdbc_driver
@@ -214,23 +246,29 @@ def collect(
         writer = sinks.JdbcSnapshotWriter(
             spark, destination.url, destination.batch_size
         )
-        for i, (tname, df) in enumerate(tables.items()):
-            writer.stage(tname, _jsonify_complex(df))
-            counts[tname] = df.count()
-            fb.progress("load", f"staged {tname} ({counts[tname]} rows)")
-            fb.progress_done("load", i + 1, len(tables))
+    counts: dict[str, int] = {}
+    for i, (tname, df) in enumerate(tables.items()):
+        start = time.perf_counter()
+        if jdbc or destination.format == "csv":
+            df = _jsonify_complex(df)
+        rows = Observation()
+        df = df.observe(rows, F.count(F.lit(1)).alias("n"))
+        if jdbc:
+            writer.stage(tname, df)
+        elif destination.format == "csv":
+            sinks.write_csv(df, f"{destination.path}/{tname}")
+        else:
+            sinks.write_parquet_snapshot(df, f"{destination.path}/{tname}")
+        counts[tname] = rows.get["n"]
+        fb.progress(
+            "load",
+            f"{'staged' if jdbc else 'wrote'} {tname} "
+            f"({counts[tname]} rows, {time.perf_counter() - start:.2f} s)",
+        )
+        fb.progress_done("load", i + 1, len(tables))
+    if jdbc:
         writer.swap()  # atomic promote only after every load succeeded
         fb.progress("load", "snapshot promoted")
-    else:
-        for i, (tname, df) in enumerate(tables.items()):
-            path = f"{destination.path}/{tname}"
-            if destination.format == "csv":
-                sinks.write_csv(_jsonify_complex(df), path)
-            else:
-                sinks.write_parquet_snapshot(df, path)
-            counts[tname] = df.count()
-            fb.progress("load", f"wrote {tname} ({counts[tname]} rows)")
-            fb.progress_done("load", i + 1, len(tables))
     return counts
 
 
@@ -239,9 +277,12 @@ def _run_source(
     name: str,
     factory: SourceFactory,
     source_cfg: dict | None,
+    persisted: list[DataFrame],
     feedback: "ProgressReporter | None" = None,
 ) -> dict[str, DataFrame]:
-    """One source's collect + flatten, run on a pool thread."""
+    """One source's collect + flatten, run on a pool thread. The source's
+    graph is persisted (and recorded in ``persisted`` for the caller to
+    release) and materialized with one action: the run's one API sweep."""
     from cloud2sql_spark.etl.progress import NullReporter
 
     fb = feedback or NullReporter()
@@ -251,6 +292,11 @@ def _run_source(
         fb.progress(name, "collecting")
         source_fn, catalog_fn = factory(source_cfg)
         nodes, edges = source_fn(spark)
+        # nodes first: edges derive from nodes, so caching edges plans
+        # them over the cached nodes
+        for df in (nodes, edges):
+            persisted.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        nodes.count()
         tables = flatten_graph(nodes, edges, catalog_fn())
         fb.progress(name, f"collected ({len(tables)} tables)")
         return tables
@@ -262,7 +308,6 @@ def _jsonify_complex(df: DataFrame) -> DataFrame:
     """Complex/array/map columns -> JSON text at the flat-sink boundary
     (the reference's SqlUpdater stores complex properties as JSON [dep];
     SURVEY §1.3 'keep as StructType internally')."""
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     cols = []

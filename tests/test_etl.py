@@ -31,6 +31,10 @@ from cloud2sql_spark.etl.pipeline import collect, distributed_collect
 _TMP = os.path.join(tempfile.gettempdir(), "cloud2sql_spark", "etl_tests")
 
 
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_flatten_golden_counts(spark):
     """Graph -> relational flatten yields exactly the reference's 13
     tables with the reference's exact row counts."""
@@ -442,7 +446,8 @@ def test_sources_collect_concurrently(spark, monkeypatch):
 
 def test_failing_source_blocks_promote(spark, monkeypatch):
     """A source that fails must abort the run BEFORE anything is staged or
-    promoted (A19 fail-fast preserved under the thread pool)."""
+    promoted (A19 fail-fast preserved under the thread pool), and must
+    not leak the snapshot the healthy source already persisted."""
     import shutil
 
     from cloud2sql_spark.etl import pipeline
@@ -453,16 +458,36 @@ def test_failing_source_blocks_promote(spark, monkeypatch):
 
         return source_fn, example_catalog
 
+    # the healthy source reports whether its graph was held when the
+    # pipeline asked for its catalog (after persist, before flatten)
+    held: dict = {}
+
+    def example_factory(cfg):
+        def source_fn(sp):
+            held["nodes"], edges = collect_example(sp)
+            return held["nodes"], edges
+
+        def catalog_fn():
+            held["cached"] = held["nodes"].is_cached
+            return example_catalog()
+
+        return source_fn, catalog_fn
+
     monkeypatch.setitem(pipeline.SOURCES, "boom", boom_factory)
+    monkeypatch.setitem(pipeline.SOURCES, "example", example_factory)
     out = os.path.join(_TMP, "failfast_out")
     shutil.rmtree(out, ignore_errors=True)
     cfg = parse_config(
         "sources:\n  example:\n  boom:\n"
         f"destinations:\n  file:\n    path: {out}\n    format: csv\n"
     )
+    before = _persistent_rdds(spark)
     with pytest.raises(RuntimeError, match="collector exploded"):
         collect(spark, cfg, destination_from_config(cfg))
     assert not os.path.exists(out)  # nothing written, let alone promoted
+    assert held["cached"] is True
+    assert not held["nodes"].is_cached
+    assert _persistent_rdds(spark) == before
 
 
 # ---------------------------------------------------------------------------
@@ -951,3 +976,115 @@ def test_cli_analytics_opt_out_parity():
     )
     assert args.analytics_opt_out is True
     assert parse_args(["--config", "c.yaml"]).analytics_opt_out is False
+
+
+# ---------------------------------------------------------------------------
+# Snapshot lifetime: one API sweep per source per run, the graph held until
+# promote and released afterwards, row counts taken from the write itself
+# ---------------------------------------------------------------------------
+
+
+def _read_back(spark, dest, table: str):
+    if isinstance(dest, JdbcDestination):
+        return (
+            spark.read.format("jdbc")
+            .option("url", dest.url.replace(";create=true", ""))
+            .option("dbtable", table)
+            .load()
+        )
+    if dest.format == "csv":
+        return spark.read.option("header", True).csv(f"{dest.path}/{table}")
+    return spark.read.parquet(f"{dest.path}/{table}")
+
+
+def _destinations(tag: str, formats: tuple[str, ...]) -> list:
+    import shutil
+
+    out = []
+    for fmt in formats:
+        path = os.path.join(_TMP, f"{tag}_{fmt}")
+        shutil.rmtree(path, ignore_errors=True)
+        if fmt == "jdbc":
+            out.append(JdbcDestination(url=f"jdbc:derby:{path};create=true"))
+        else:
+            out.append(FileDestination(path=path, format=fmt))
+    return out
+
+
+@pytest.mark.parametrize(
+    "source, fetch_fn, scopes",
+    [
+        ("aws_mock", "_fetch_region", ("DEFAULT_ACCOUNTS", "DEFAULT_REGIONS")),
+        ("k8s_mock", "_fetch_namespace", ("DEFAULT_CLUSTERS", "DEFAULT_NAMESPACES")),
+        ("gcp_mock", "_fetch_zone", ("DEFAULT_PROJECTS", "DEFAULT_ZONES")),
+        ("do_mock", "_fetch_region", ("DEFAULT_TEAMS", "DEFAULT_REGIONS")),
+    ],
+)
+def test_collect_fetches_each_task_once(spark, monkeypatch, source, fetch_fn, scopes):
+    """One collect() run calls the mock API exactly once per (account,
+    region) task, whatever the destination: every kind table, link table
+    and row count reads the persisted graph. A source that derives its
+    edges from the raw fetch instead of the returned ``nodes`` re-runs
+    the fetch for every edge plan and fails here. The run releases what
+    it persisted, and its counts match the golden and read-back counts."""
+    import importlib
+
+    mod = importlib.import_module(f"cloud2sql_spark.etl.{source}_source")
+    tasks = [(a, r) for a in getattr(mod, scopes[0]) for r in getattr(mod, scopes[1])]
+    for dest in _destinations(f"fetch_once_{source}", ("jdbc", "parquet")):
+        calls = {t: spark.sparkContext.accumulator(0) for t in tasks}
+        fetch = getattr(mod, fetch_fn)
+
+        def counted(*args, fetch=fetch, calls=calls):
+            calls[args[:2]].add(1)
+            return fetch(*args)
+
+        monkeypatch.setattr(mod, fetch_fn, counted)
+        before = _persistent_rdds(spark)
+        counts = collect(spark, {"sources": {source: {}}}, dest)
+        monkeypatch.setattr(mod, fetch_fn, fetch)
+
+        assert {t: acc.value for t, acc in calls.items()} == dict.fromkeys(tasks, 1)
+        assert _persistent_rdds(spark) == before
+        assert counts == mod.GOLDEN_COUNTS
+        assert {t: _read_back(spark, dest, t).count() for t in counts} == counts
+
+
+def test_counts_come_from_the_write(spark, monkeypatch):
+    """The returned per-table counts are observed during each table's
+    write, so they must equal what a reader finds in the destination —
+    for the JDBC, parquet and CSV branches, including a catalog kind
+    with no nodes (a zero-row table). Each ``[load]`` progress line
+    carries the table's rows and the seconds its write took."""
+    import io
+    import re
+
+    from cloud2sql_spark.etl import pipeline
+    from cloud2sql_spark.etl.model import Kind
+    from cloud2sql_spark.etl.progress import ProgressReporter
+
+    def catalog_with_empty_kind():
+        catalog = example_catalog()
+        catalog.add(Kind("example_empty", {"note": "string"}))
+        return catalog
+
+    monkeypatch.setitem(
+        pipeline.SOURCES, "example", lambda cfg: (collect_example, catalog_with_empty_kind)
+    )
+    expected = {**GOLDEN_COUNTS, "example_empty": 0}
+    for dest in _destinations("counted", ("jdbc", "parquet", "csv")):
+        buf = io.StringIO()
+        counts = collect(
+            spark, {"sources": {"example": None}}, dest,
+            feedback=ProgressReporter(stream=buf),
+        )
+        assert counts == expected, dest
+        back = {t: _read_back(spark, dest, t).count() for t in counts}
+        assert back == counts, dest
+        loads = [
+            re.fullmatch(r"\[load\] (?:staged|wrote) (\w+) \((\d+) rows, \d+\.\d\d s\)", l)
+            for l in buf.getvalue().splitlines()
+            if l.startswith(("[load] staged ", "[load] wrote "))
+        ]
+        assert all(loads), buf.getvalue()
+        assert {m[1]: int(m[2]) for m in loads} == counts, buf.getvalue()

@@ -1160,10 +1160,14 @@ def test_pq_adc_topk_is_two_level(spark, sf_dir):
     plan = _physical(_QUERIES["sim_search_pq_adc"](spark, sf_dir))
     wlines = [ln for ln in plan.splitlines() if "Window [" in ln]
     assert len(wlines) == 2, plan
-    # exactly one of the two windows partitions by the extra bucket
-    # column (the hash expression itself is elided by the plan printer,
-    # so assert on the partition spec arity)
-    assert sum("b#" in ln for ln in wlines) == 1, plan
+    # a Window line ends "..., [<partition spec>], [<order spec>]"; the
+    # hash expression itself is elided by the plan printer, so assert on
+    # the partition specs: the local window partitions by (qid, bucket),
+    # the global one by the same qid alone
+    specs = [ln.rsplit("], [", 2)[1].split(", ") for ln in wlines]
+    assert sorted(len(s) for s in specs) == [1, 2], plan
+    glob, local = sorted(specs, key=len)
+    assert local[0] == glob[0], plan
 
 
 def test_fn_json_single_parse_family(spark, sf_dir):
