@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloud2sql_spark.catalog import load_table
+from cloud2sql_spark.queries.extensions import _memo, _track
 from cloud2sql_spark.queries.rounding import (
     ratio_round_oracle,
     ratio_round_spark,
@@ -813,28 +814,10 @@ def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped memo, same pattern as extensions._QUANT_CACHE: the
-# degree-annotated edge list is scanned once per PageRank superstep (plus
-# once for the initial ranks), and repeated invocations in one session
-# (tests, bench trials) would otherwise persist a fresh copy each time
-# with nothing evicting the old ones.
-_PAGERANK_EDGE_CACHE: dict = {}
-_PAGERANK_EDGE_CACHE_MAX = 4
-
-# Wire into the one reset hook (extensions.clear_shingle_cache) so bench
-# trial resets and fixture-rewrite escapes clear this memo too.
-from cloud2sql_spark.queries.extensions import (  # noqa: E402
-    evict_lru,
-    register_session_cache,
-)
-
-register_session_cache(_PAGERANK_EDGE_CACHE)
-
-
 def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, d): both directions of the distinct part–supplier edge
-    list, annotated with the source's degree; persisted per
-    (session, sf_dir) with bounded eviction.
+    list, annotated with the source's degree; session-memoized, since
+    every PageRank superstep scans it.
 
     Node ids are LONGS (part pk → 2·pk, supplier sk → 2·sk+1 — the two
     key spaces interleave injectively), not the output's 'p{pk}'/'s{sk}'
@@ -843,34 +826,28 @@ def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares without allocation (guide §2.3 — narrower shuffle types).
     graph_pagerank renders the contract strings once, after the last
     iteration."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PAGERANK_EDGE_CACHE:
-        # LRU-on-access: re-insert so a hot entry is never the eviction
-        # victim while a caller may still hold its DataFrame
-        _PAGERANK_EDGE_CACHE[key] = _PAGERANK_EDGE_CACHE.pop(key)
-        return _PAGERANK_EDGE_CACHE[key]
-    # Eviction unpersists; a previously returned DataFrame still
-    # referencing the evicted entry stays CORRECT but silently degrades
-    # to recomputing the edge list per action (never an error).
-    evict_lru(_PAGERANK_EDGE_CACHE, _PAGERANK_EDGE_CACHE_MAX)
-    li = load_table(spark, sf_dir, "lineitem")
-    e0 = li.select("l_partkey", "l_suppkey").distinct()
-    fwd = e0.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # Degree annotation as a window count over the src partitioning
-    # (r15, guide §2.4 — share one exchange): the former groupBy +
-    # re-join exchanged the edge list twice (once into the aggregate,
-    # once into the join) and sorted both join legs; the window needs
-    # exactly ONE exchange by src, and its output keeps that
-    # partitioning for the iteration joins. Interleaved A/B best-of-4
-    # (build + 3 iterations): 2.21 -> 1.79s, ranks identical.
-    w = Window.partitionBy("src")
-    out = edges.withColumn("d", F.count(F.lit(1)).over(w)).persist()
-    _PAGERANK_EDGE_CACHE[key] = out
-    return out
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem")
+        e0 = li.select("l_partkey", "l_suppkey").distinct()
+        fwd = e0.select(
+            (F.col("l_partkey") * 2).cast("long").alias("src"),
+            (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
+        )
+        edges = fwd.union(
+            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        # Degree annotation as a window count over the src partitioning
+        # (r15, guide §2.4 — share one exchange): the former groupBy +
+        # re-join exchanged the edge list twice (once into the aggregate,
+        # once into the join) and sorted both join legs; the window needs
+        # exactly ONE exchange by src, and its output keeps that
+        # partitioning for the iteration joins. Interleaved A/B best-of-4
+        # (build + 3 iterations): 2.21 -> 1.79s, ranks identical.
+        w = Window.partitionBy("src")
+        return edges.withColumn("d", F.count(F.lit(1)).over(w))
+
+    return _memo(spark, ("pagerank_edges", sf_dir), build)
 
 
 @register(
@@ -1248,61 +1225,51 @@ def events_gap_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Persisted co-purchase edge list, session-tracked like the pagerank edge
-# cache so the one reset hook can unpersist it — an untracked persist()
-# would pin the edges in executor storage for the rest of the session.
-_TRIANGLE_EDGE_CACHE: dict = {}
-register_session_cache(_TRIANGLE_EDGE_CACHE)
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct low-id-oriented part co-purchase edges, persisted per
-    (session, sf_dir): the frame feeds all three triangle join legs plus
-    the node/edge stats."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TRIANGLE_EDGE_CACHE:
-        _TRIANGLE_EDGE_CACHE[key] = _TRIANGLE_EDGE_CACHE.pop(key)
-        return _TRIANGLE_EDGE_CACHE[key]
-    evict_lru(_TRIANGLE_EDGE_CACHE, 4)
-    # Explicit cluster-width partitioning end to end: the orderkey hash
-    # satisfies the per-order grouping below (subset-of-clustering-keys
-    # rule), so the whole build runs at defaultParallelism instead of
-    # spark.sql.shuffle.partitions — the vanilla driver session's
-    # 200/400-task stages on a ~1M-row edge list were pure scheduling
-    # overhead for every graph_* key.
-    p = spark.sparkContext.defaultParallelism
-    pl = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .repartition(p, "l_orderkey")
-    )
-    # Pair generation in-array instead of the former co-partitioned
-    # self-join (r15): collect_set per order reuses the orderkey
-    # partitioning (one grouped pass replaces the distinct AND both
-    # sorted join legs), and the i<j pairs of the ascending array are
-    # exactly the a.pk < b.pk join output. Per-order work stays bounded
-    # by C(lines-per-order, 2) — the same combinatorial fan-out the
-    # join materialized, now emitted map-side with no sort. Interleaved
-    # A/B best-of-4: 1.95 -> 1.39s at sf0.1, edge rows identical.
-    grp = pl.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("pks")
-    )
-    pairs = grp.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "pks",
-                    lambda x, i: F.transform(
-                        F.slice("pks", i + 2, F.size("pks")),
-                        lambda y: F.struct(x.alias("u"), y.alias("v")),
-                    ),
+    """Distinct low-id-oriented part co-purchase edges, session-memoized:
+    the frame feeds all three triangle join legs plus the node/edge
+    stats."""
+
+    def build() -> DataFrame:
+        # Explicit cluster-width partitioning end to end: the orderkey hash
+        # satisfies the per-order grouping below (subset-of-clustering-keys
+        # rule), so the whole build runs at defaultParallelism instead of
+        # spark.sql.shuffle.partitions — the vanilla driver session's
+        # 200/400-task stages on a ~1M-row edge list were pure scheduling
+        # overhead for every graph_* key.
+        p = spark.sparkContext.defaultParallelism
+        pl = (
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_partkey")
+            .repartition(p, "l_orderkey")
+        )
+        # Pair generation in-array instead of the former co-partitioned
+        # self-join (r15): collect_set per order reuses the orderkey
+        # partitioning (one grouped pass replaces the distinct AND both
+        # sorted join legs), and the i<j pairs of the ascending array are
+        # exactly the a.pk < b.pk join output. Per-order work stays bounded
+        # by C(lines-per-order, 2) — the same combinatorial fan-out the
+        # join materialized, now emitted map-side with no sort. Interleaved
+        # A/B best-of-4: 1.95 -> 1.39s at sf0.1, edge rows identical.
+        grp = pl.groupBy("l_orderkey").agg(
+            F.sort_array(F.collect_set("l_partkey")).alias("pks")
+        )
+        pairs = grp.select(
+            F.explode(
+                F.flatten(
+                    F.transform(
+                        "pks",
+                        lambda x, i: F.transform(
+                            F.slice("pks", i + 2, F.size("pks")),
+                            lambda y: F.struct(x.alias("u"), y.alias("v")),
+                        ),
+                    )
                 )
-            )
-        ).alias("uv")
-    ).select("uv.u", "uv.v")
-    e = pairs.repartition(p, "u", "v").distinct().persist()
-    _TRIANGLE_EDGE_CACHE[key] = e
-    return e
+            ).alias("uv")
+        ).select("uv.u", "uv.v")
+        return pairs.repartition(p, "u", "v").distinct()
+
+    return _memo(spark, ("copurchase_edges", sf_dir), build)
 
 
 def degree_orient_enabled() -> bool:
@@ -1311,25 +1278,16 @@ def degree_orient_enabled() -> bool:
 
 
 def _oriented_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-oriented co-purchase edges, persisted per (session, sf_dir)
-    in the same session-tracked cache as the id-oriented frame (under a
-    distinct key): like its parent, the reoriented frame feeds the
-    adjacency build, both join legs, and the node/edge stats, so an
-    unpersisted version would recompute the degree aggregate and both
-    |V|-row joins per consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir, "oriented")
-    if key in _TRIANGLE_EDGE_CACHE:
-        _TRIANGLE_EDGE_CACHE[key] = _TRIANGLE_EDGE_CACHE.pop(key)
-        return _TRIANGLE_EDGE_CACHE[key]
-    # same 4-frame LRU bound as the parent — but evict AFTER the parent
-    # call: _copurchase_edges may itself insert on a miss, and evicting
-    # first would let that nested insert push the cache to bound+1 (the
-    # parent, inserted last, is never the eviction victim here).
-    o = _degree_orient(_copurchase_edges(spark, sf_dir))
-    evict_lru(_TRIANGLE_EDGE_CACHE, 4)
-    o = o.persist()
-    _TRIANGLE_EDGE_CACHE[key] = o
-    return o
+    """Degree-oriented co-purchase edges, session-memoized under a key of
+    their own next to the id-oriented frame: like its parent, the
+    reoriented frame feeds the adjacency build, both join legs, and the
+    node/edge stats, so an unpersisted version would recompute the
+    degree aggregate and both |V|-row joins per consumer."""
+    return _memo(
+        spark,
+        ("copurchase_edges_oriented", sf_dir),
+        lambda: _degree_orient(_copurchase_edges(spark, sf_dir)),
+    )
 
 
 def _degree_orient(e: DataFrame) -> DataFrame:
@@ -1428,8 +1386,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once under each leg (measured 1.97s -> 0.98s at sf0.1; a
     # shuffle_hash hint on the legs measured SLOWER than letting the
     # persisted side sort-merge, 1.53s, and was not applied).
-    from cloud2sql_spark.queries.extensions import _track
-
     adj = _track(
         e.groupBy("u")
         .agg(F.sort_array(F.collect_list("v")).alias("nbrs"))
@@ -2497,15 +2453,16 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the broadcast exchange) and the scoring join probe — exchange
         # reuse does not fire across a broadcast boundary, so without
         # the cache the per-user aggregation of events runs twice. The
-        # frame is |users| rows; computed once per call on a path meant
-        # for one-shot scale runs, Spark's LRU eviction bounds residue.
-        ax = u.select(
-            "user_id",
-            "mon_c",
-            F.col("rec_us").alias("kr"),
-            (-F.col("freq")).alias("kf"),
-            (-F.col("mon_c")).alias("km"),
-        ).persist()
+        # frame is |users| rows, tracked so the reset hook releases it.
+        ax = _track(
+            u.select(
+                "user_id",
+                "mon_c",
+                F.col("rec_us").alias("kr"),
+                (-F.col("freq")).alias("kf"),
+                (-F.col("mon_c")).alias("km"),
+            ).persist()
+        )
         b = ax.agg(
             *boundary_aggs(
                 {"br": F.col("kr"), "bf": F.col("kf"), "bm": F.col("km")}, 5

@@ -37,6 +37,7 @@ from cloud2sql_spark.queries.extensions import (
     _int_dot,
     _lsh_bucket_frame,
     _quantized,
+    _track,
 )
 from cloud2sql_spark.registry import register
 
@@ -1001,7 +1002,7 @@ def sample_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # broadcast exchange) and the scoring probe — without the cache
         # the documents scan + tokenization runs twice (exchange reuse
         # does not cross a broadcast boundary)
-        diff = diff.persist()
+        diff = _track(diff.persist())
         b = diff.agg(
             *boundary_aggs({"bd": F.col("difficulty_milli")}, 4)
         )

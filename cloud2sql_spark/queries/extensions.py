@@ -61,32 +61,28 @@ _EXACT_JACCARD_PAIRS_SQL = f"""
 """
 
 
-# One persisted shingle frame per (session, sf_dir, nonempty): every dedup
-# op shares the index the way a production pipeline shares it. Explicit
+# The engine's one session memo: every shared persisted frame (shingles,
+# quantized embeddings, LSH buckets, the dedup indexes, the graph edge
+# lists) lives here under (applicationId, kind, sf_dir, ...). Explicit
 # memo instead of relying on Spark's cache-manager plan equality, which is
-# fragile across separately-constructed mapInPandas nodes. Bounded: a
-# long-lived session touching many sf_dirs evicts (and unpersists) the
-# oldest entries instead of accumulating executor storage forever.
-_SHINGLE_CACHE: dict = {}
-_SHINGLE_CACHE_MAX = 8
-
-# Other modules register their session-scoped persisted-frame memos here
-# (analytics' pagerank edge list) so the one reset hook clears EVERY
-# shared cache — a memo that survives the hook would serve frames whose
-# persist was dropped (bench clears between trials) or stale data after
-# a fixture rewrite.
-_EXTRA_SESSION_CACHES: list[dict] = []
-
-
-def register_session_cache(cache: dict) -> None:
-    _EXTRA_SESSION_CACHES.append(cache)
+# fragile across separately-constructed mapInPandas nodes. Bounded LRU:
+# a long-lived session touching many sf_dirs evicts (and unpersists) the
+# least recently used frames instead of accumulating executor storage
+# forever. 32 entries hold every memo kind of about three fixture dirs
+# (a dir has at most ~11 kinds). Keys carry the flag state when a flag
+# changes the plan, so a flagged run never serves a frame built under
+# the other plan shape. The counters are cumulative for the process
+# (memo_stats); the reset hook does not zero them.
+_MEMO: dict = {}
+_MEMO_MAX = 32
+_MEMO_STATS = {"hits": 0, "misses": 0, "evictions": 0}
 
 
 # Per-call intermediate persists (an op's tok/prefix/posting frames) are
 # not memoized — a repeat invocation rebuilds them — but the storage they
 # pin would otherwise live until Spark's own eviction. Tracking them here
 # lets clear_shingle_cache (the bench/test reset hook) release them along
-# with the session caches (ADVICE r07). The list itself is BOUNDED: a
+# with the session memo (ADVICE r07). The list itself is BOUNDED: a
 # long session that never calls the reset hook (the driver's 289-key
 # sweep) must not pin every past frame's plan graph for the process
 # lifetime, so the oldest entries are unpersisted and dropped once the
@@ -103,15 +99,20 @@ _EPHEMERAL_PERSISTS: list = []
 _EPHEMERAL_MAX = 256
 
 
+def _release(df) -> None:
+    """Unpersist, swallowing the failure of a frame already freed (or
+    whose session is gone): releasing storage is never worth an error."""
+    try:
+        df.unpersist()
+    except Exception:
+        pass
+
+
 def _track(df: DataFrame) -> DataFrame:
     """Register a per-call persisted frame for release by the reset hook."""
     evicted = 0
     while len(_EPHEMERAL_PERSISTS) >= _EPHEMERAL_MAX:
-        old = _EPHEMERAL_PERSISTS.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+        _release(_EPHEMERAL_PERSISTS.pop(0))
         evicted += 1
     if evicted:
         import logging
@@ -128,41 +129,56 @@ def _track(df: DataFrame) -> DataFrame:
     return df
 
 
-def evict_lru(cache: dict, bound: int) -> None:
-    """Pop + unpersist oldest entries until the cache is below ``bound``.
+def evict_lru(cache: dict, bound: int) -> int:
+    """Pop + unpersist oldest entries until the cache is below ``bound``;
+    returns how many were evicted.
 
     Insertion order doubles as LRU order because every cache HIT
-    re-inserts its key (pop + assign). One shared helper: this loop was
-    copy-pasted into six call sites across three modules, and one copy
-    landed with a subtly wrong placement (eviction before a nested
-    insert, letting the bound overrun) — divergence this extraction
-    prevents. Call immediately before inserting, AFTER any nested call
-    that may itself insert."""
+    re-inserts its key (pop + assign). Call immediately before inserting,
+    AFTER any nested call that may itself insert."""
+    evicted = 0
     while len(cache) >= bound:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+        _release(cache.pop(next(iter(cache))))
+        evicted += 1
+    return evicted
+
+
+def _memo(spark: SparkSession, tag: tuple, build) -> DataFrame:
+    """Return the session's persisted ``build()`` frame for ``tag``.
+
+    A hit re-inserts the entry (LRU). A miss runs ``build()`` FIRST, then
+    evicts, then persists and inserts: a build that itself memoizes
+    (simhash → shingles, oriented → id-oriented edges) has already
+    inserted or refreshed its input by the time the victim is chosen, so
+    the nested entry is never the victim and the store never exceeds
+    ``_MEMO_MAX``. An evicted frame a caller still holds stays correct;
+    it just recomputes per action."""
+    key = (spark.sparkContext.applicationId, *tag)
+    if key in _MEMO:
+        _MEMO_STATS["hits"] += 1
+        _MEMO[key] = _MEMO.pop(key)
+        return _MEMO[key]
+    _MEMO_STATS["misses"] += 1
+    out = build()
+    _MEMO_STATS["evictions"] += evict_lru(_MEMO, _MEMO_MAX)
+    out = out.persist()
+    _MEMO[key] = out
+    return out
+
+
+def memo_stats() -> dict:
+    """A copy of the session memo's cumulative hit/miss/eviction counts."""
+    return dict(_MEMO_STATS)
 
 
 def clear_shingle_cache() -> None:
-    """Unpersist and drop every cached shared frame — shingles, quantized
-    embeddings, and any registered module cache (test/ops hook; also the
-    escape hatch when fixture files under a cached path are rewritten
-    mid-session and would otherwise serve stale data)."""
-    for cache in (_SHINGLE_CACHE, _QUANT_CACHE, *_EXTRA_SESSION_CACHES):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    for df in _EPHEMERAL_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    """Unpersist and drop every session memo and every tracked persist
+    (test/ops hook; also the escape hatch when fixture files under a
+    memoized path are rewritten mid-session and would otherwise serve
+    stale data)."""
+    for df in (*_MEMO.values(), *_EPHEMERAL_PERSISTS):
+        _release(df)
+    _MEMO.clear()
     _EPHEMERAL_PERSISTS.clear()
 
 
@@ -183,17 +199,8 @@ def _doc_shingles(
     cores (the fixture is a single file split; on a many-split lake table
     it is a cheap rebalance)."""
     # ONE Arrow pass per (session, sf_dir): the nonempty variant is a
-    # filter over the same cached frame, not a second build (the two
+    # filter over the same memoized frame, not a second build (the two
     # variants used to cost two full shingle passes per session).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SHINGLE_CACHE:
-        full = _SHINGLE_CACHE[key]
-        return full.filter(F.size("sg") > 0) if nonempty else full
-    evict_lru(_SHINGLE_CACHE, _SHINGLE_CACHE_MAX)
-    docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism * 2
-    base = docs.select("doc_id", "text").repartition(par)
-
     def shingle(batches):
         import pandas as pd
 
@@ -224,8 +231,13 @@ def _doc_shingles(
                 sgs.append(sg)
             yield pd.DataFrame({"doc_id": ids, "sg": sgs})
 
-    full = base.mapInPandas(shingle, "doc_id BIGINT, sg ARRAY<STRING>").persist()
-    _SHINGLE_CACHE[key] = full
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        par = spark.sparkContext.defaultParallelism * 2
+        base = docs.select("doc_id", "text").repartition(par)
+        return base.mapInPandas(shingle, "doc_id BIGINT, sg ARRAY<STRING>")
+
+    full = _memo(spark, ("shingles", sf_dir), build)
     return full.filter(F.size("sg") > 0) if nonempty else full
 
 
@@ -273,7 +285,7 @@ def _exact_jaccard_pairs_shared(
     shingles — one build serves dedup_ngram_jaccard, the quality
     report's truth side and the banding curve's S-curve input."""
     flag = flag_enabled("SPARK_GRAFT_PREFIX_FILTER")
-    return _dedup_shared(
+    return _memo(
         spark,
         ("jaccard_pairs", sf_dir, threshold, flag),
         lambda: _exact_jaccard_pairs(
@@ -381,27 +393,21 @@ def _exact_jaccard_pairs(shingled: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-# Same session-scoped memo pattern as _SHINGLE_CACHE: a dozen embedding
-# ops (and several branches WITHIN ops — centroids, probes, candidate
-# sides) each re-derive the quantized frame from the parquet scan
-# otherwise; persisting it serves them all from one materialization.
-_QUANT_CACHE: dict = {}
-
-
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings quantized to integer milli-units (exact arithmetic);
-    persisted per (session, sf_dir) and shared across the embed family."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _QUANT_CACHE:
-        return _QUANT_CACHE[key]
-    evict_lru(_QUANT_CACHE, _SHINGLE_CACHE_MAX)
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        "embedding", lambda x: F.round(x.cast("double") * 1000, 0).cast("long")
-    )
-    out = emb.select("vec_id", "label", qv.alias("v")).persist()
-    _QUANT_CACHE[key] = out
-    return out
+    session-memoized: a dozen embedding ops (and several branches WITHIN
+    ops — centroids, probes, candidate sides) would each re-derive the
+    frame from the parquet scan otherwise."""
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        qv = F.transform(
+            "embedding",
+            lambda x: F.round(x.cast("double") * 1000, 0).cast("long"),
+        )
+        return emb.select("vec_id", "label", qv.alias("v"))
+
+    return _memo(spark, ("quant", sf_dir), build)
 
 
 def _int_dot(a: Column | str, b: Column | str) -> Column:
@@ -428,35 +434,15 @@ def _ordered_collect(idx_col: str, val_col: str) -> Column:
 
 # ---------------------------------------------------------------- dedup
 
-# Session-scoped memos for the dedup family's shared intermediates, the
-# _SHINGLE_CACHE pattern one level up: the exact-Jaccard truth pair set
-# (consumed by dedup_ngram_jaccard, dedup_quality_report AND
-# dedup_minhash_banding_curve), the SimHash signature frame
-# (dedup_simhash + dedup_quality_report), and the df-capped candidate
-# metadata (_capped_sr_meta: dedup_ngram_capped, dedup_containment,
-# dedup_cluster_cc). Each was rebuilt — explode, df groupBy, posting
-# lists, Arrow signature pass and all — once PER CONSUMER per session
-# (measured: 3 full _capped_sr_meta builds and 3 truth builds in one
-# bench trial); a production pipeline derives each index once per
-# corpus. Cleared with the shingle cache (bench clears between trials,
-# so every trial still computes from the parquet inputs). Keys carry
-# the PREFIX_FILTER flag state so a flagged test run never serves a
-# frame built under the other plan shape.
-_DEDUP_SHARED_CACHE: dict = {}
-_EXTRA_SESSION_CACHES.append(_DEDUP_SHARED_CACHE)
+# The dedup family's shared intermediates are session-memoized (_memo),
+# each read by several operators: the exact-Jaccard truth pair set
+# (dedup_ngram_jaccard, dedup_quality_report, dedup_minhash_banding_curve),
+# the SimHash signature frame (dedup_simhash, dedup_quality_report) and
+# the df-capped candidate metadata (_capped_sr_meta: dedup_ngram_capped,
+# dedup_containment, dedup_cluster_cc). A production pipeline derives
+# each index once per corpus; bench clears the memo between trials, so
+# every trial still computes from the parquet inputs.
 
-
-def _dedup_shared(spark: SparkSession, tag: tuple, build) -> DataFrame:
-    """Memoize ``build()``'s persisted frame under (applicationId, *tag)
-    with the LRU-on-access discipline of _LSH_BUCKET_CACHE."""
-    key = (spark.sparkContext.applicationId, *tag)
-    if key in _DEDUP_SHARED_CACHE:
-        _DEDUP_SHARED_CACHE[key] = _DEDUP_SHARED_CACHE.pop(key)
-        return _DEDUP_SHARED_CACHE[key]
-    evict_lru(_DEDUP_SHARED_CACHE, _SHINGLE_CACHE_MAX)
-    out = build().persist()
-    _DEDUP_SHARED_CACHE[key] = out
-    return out
 
 @register(
     "dedup_exact",
@@ -679,7 +665,7 @@ def _simhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return shingled.mapInPandas(simhash_sig, "doc_id BIGINT, s BIGINT")
 
-    return _dedup_shared(spark, ("simhash_sig", sf_dir), build)
+    return _memo(spark, ("simhash_sig", sf_dir), build)
 
 
 @register("dedup_simhash", oracle=_SIMHASH_PAIRS_SQL)
@@ -987,69 +973,58 @@ _LSH_BUCKETS_SQL = f"""q AS (SELECT vec_id, {_QUANT_SQL} AS v
                        sum(CASE WHEN dot >= 0 THEN 1 << p ELSE 0 END) AS bucket
                 FROM dots GROUP BY 1, 2)"""
 
-_LSH_BUCKET_CACHE: dict = {}
-_EXTRA_SESSION_CACHES.append(_LSH_BUCKET_CACHE)
-
-
 def _lsh_bucket_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, l, bucket) for every vector under the shared hyperplane
-    tables — numpy sign-matmul per Arrow batch, persisted per
-    (session, sf_dir) since it feeds both sides of candidate joins in
-    two operators."""
-    import hashlib
+    tables — numpy sign-matmul per Arrow batch, session-memoized since
+    it feeds both sides of candidate joins in two operators."""
 
-    import numpy as np
-    import pandas as pd
+    def build() -> DataFrame:
+        import hashlib
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LSH_BUCKET_CACHE:
-        # LRU-on-access (the _PAGERANK_EDGE_CACHE rule): a hot entry must
-        # not be the eviction victim while a caller still holds its frame
-        _LSH_BUCKET_CACHE[key] = _LSH_BUCKET_CACHE.pop(key)
-        return _LSH_BUCKET_CACHE[key]
-    evict_lru(_LSH_BUCKET_CACHE, _SHINGLE_CACHE_MAX)
-    n_tables, n_planes = 4, 8
-    H = np.empty((n_tables, n_planes, 64), dtype=np.int64)
-    for t in range(n_tables):
-        for p in range(n_planes):
-            for d in range(1, 65):
-                nib = int(
-                    hashlib.md5(f"{t}_{p}_{d}".encode()).hexdigest()[0], 16
+        import numpy as np
+        import pandas as pd
+
+        n_tables, n_planes = 4, 8
+        H = np.empty((n_tables, n_planes, 64), dtype=np.int64)
+        for t in range(n_tables):
+            for p in range(n_planes):
+                for d in range(1, 65):
+                    nib = int(
+                        hashlib.md5(f"{t}_{p}_{d}".encode()).hexdigest()[0],
+                        16,
+                    )
+                    H[t, p, d - 1] = 1 if nib & 1 else -1
+        pows = (1 << np.arange(n_planes)).astype(np.int64)
+
+        # a NULL embedding has no hyperplane signs: it never enters the
+        # index, on either engine (r14 NULL-probe — the unfiltered oracle
+        # form's CASE WHEN NULL-dot collapsed every NULL vector into
+        # bucket 0, and the numpy matmul crashed on the ragged batch)
+        q = (
+            _quantized(spark, sf_dir)
+            .filter(F.col("v").isNotNull())
+            .select("vec_id", "v")
+            .repartition(spark.sparkContext.defaultParallelism)
+        )
+
+        def bucketize(batches):
+            for pdf in batches:
+                V = np.array(pdf["v"].tolist(), dtype=np.int64)
+                ids = pdf["vec_id"].to_numpy()
+                out_id, out_l, out_b = [], [], []
+                for t in range(n_tables):
+                    bits = (V @ H[t].T) >= 0  # (n, k)
+                    bkt = (bits * pows).sum(axis=1)
+                    out_id.extend(ids)
+                    out_l.extend([t] * len(ids))
+                    out_b.extend(bkt)
+                yield pd.DataFrame(
+                    {"vec_id": out_id, "l": out_l, "bucket": out_b}
                 )
-                H[t, p, d - 1] = 1 if nib & 1 else -1
-    pows = (1 << np.arange(n_planes)).astype(np.int64)
 
-    # a NULL embedding has no hyperplane signs: it never enters the
-    # index, on either engine (r14 NULL-probe — the unfiltered oracle
-    # form's CASE WHEN NULL-dot collapsed every NULL vector into bucket
-    # 0, and the numpy matmul crashed on the ragged batch)
-    q = (
-        _quantized(spark, sf_dir)
-        .filter(F.col("v").isNotNull())
-        .select("vec_id", "v")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+        return q.mapInPandas(bucketize, "vec_id BIGINT, l INT, bucket BIGINT")
 
-    def bucketize(batches):
-        for pdf in batches:
-            V = np.array(pdf["v"].tolist(), dtype=np.int64)
-            ids = pdf["vec_id"].to_numpy()
-            out_id, out_l, out_b = [], [], []
-            for t in range(n_tables):
-                bits = (V @ H[t].T) >= 0  # (n, k)
-                bkt = (bits * pows).sum(axis=1)
-                out_id.extend(ids)
-                out_l.extend([t] * len(ids))
-                out_b.extend(bkt)
-            yield pd.DataFrame(
-                {"vec_id": out_id, "l": out_l, "bucket": out_b}
-            )
-
-    out = q.mapInPandas(
-        bucketize, "vec_id BIGINT, l INT, bucket BIGINT"
-    ).persist()
-    _LSH_BUCKET_CACHE[key] = out
-    return out
+    return _memo(spark, ("lsh", sf_dir), build)
 
 
 @register(
@@ -1164,11 +1139,11 @@ def _capped_sr_meta(spark: SparkSession, sf_dir: str, df_cap: int = 10) -> DataF
     shuffles the token set twice — so the flag stays off by default;
     equivalence is property-tested in tests/test_prefix_filter.py.
 
-    Session-memoized (_DEDUP_SHARED_CACHE): three operators consume this
-    exact frame per session (ngram_capped, containment, cluster_cc via
-    ngram_capped) and each used to pay the full index build."""
+    Session-memoized (_memo): three operators consume this exact frame
+    per session (ngram_capped, containment, cluster_cc via ngram_capped)
+    and each used to pay the full index build."""
     flag = flag_enabled("SPARK_GRAFT_PREFIX_FILTER")
-    return _dedup_shared(
+    return _memo(
         spark,
         ("sr_meta", sf_dir, df_cap, flag),
         lambda: _capped_sr_meta_build(spark, sf_dir, df_cap),

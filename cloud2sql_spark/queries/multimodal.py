@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloud2sql_spark.catalog import load_table
+from cloud2sql_spark.queries.extensions import _track
 from cloud2sql_spark.registry import register
 
 
@@ -555,7 +556,7 @@ def dedup_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"doc_id": pdf["doc_id"], "sig": pd.array(sigs, dtype="int64")}
             )
 
-    sig = mm.mapInPandas(phash, "doc_id BIGINT, sig BIGINT").persist()
+    sig = _track(mm.mapInPandas(phash, "doc_id BIGINT, sig BIGINT").persist())
     bands = sig.select(
         "doc_id",
         "sig",

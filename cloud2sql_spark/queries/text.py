@@ -162,7 +162,9 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-scans the UTF-8 bytes); slicing the char array is O(1) per
     # position. The full corpus is never char-split: scoring reads raw
     # text (see below).
-    docs = (
+    from cloud2sql_spark.queries.extensions import _track
+
+    docs = _track(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "lang", "text")
         .repartition(spark.sparkContext.defaultParallelism)

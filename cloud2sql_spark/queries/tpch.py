@@ -669,7 +669,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter-slice scan plus a keyed aggregate (cheap), while an
     unmanaged persist inside a lazily-returned plan leaks a cached frame
     per invocation (the session-memo pattern exists for genuinely
-    expensive shared frames — extensions._QUANT_CACHE). The max is a
+    expensive shared frames — extensions._memo). The max is a
     1-row broadcast and the equality is DECIMAL-exact, so 'ties at the
     top' are found identically in both engines."""
     li = load_table(spark, sf_dir, "lineitem").filter(

@@ -8,6 +8,7 @@ arithmetic mirrored from the query implementations.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -1053,6 +1054,130 @@ def test_track_bounds_ephemeral_persists(caplog):
     finally:
         ext._EPHEMERAL_PERSISTS.clear()
         ext._EPHEMERAL_PERSISTS.extend(saved)
+
+
+class _MemoFrame:
+    """Stands in for a DataFrame in the session-memo tests."""
+
+    def __init__(self):
+        self.persisted = False
+        self.unpersisted = False
+
+    def persist(self):
+        self.persisted = True
+        return self
+
+    def unpersist(self):
+        self.unpersisted = True
+
+
+@pytest.fixture
+def memo_store():
+    """An empty session memo for a stub session (``applicationId``
+    only); the real session's entries are set aside and restored."""
+    from types import SimpleNamespace
+
+    from cloud2sql_spark.queries import extensions as ext
+
+    saved = dict(ext._MEMO)
+    ext._MEMO.clear()
+    try:
+        yield ext, SimpleNamespace(
+            sparkContext=SimpleNamespace(applicationId="stub-app")
+        )
+    finally:
+        ext._MEMO.clear()
+        ext._MEMO.update(saved)
+
+
+def test_memo_hit_is_lru_for_every_kind(memo_store):
+    """A hit moves the entry to newest, whichever builder reads it: the
+    hot shingle and quantized frames survive a full store while the
+    cold fillers around them are evicted (and unpersisted)."""
+    ext, spark = memo_store
+    d = "/fixture/sf"
+    shingles = ext._memo(spark, ("shingles", d), _MemoFrame)
+    quant = ext._memo(spark, ("quant", d), _MemoFrame)
+    fillers = [
+        ext._memo(spark, ("filler", i), _MemoFrame)
+        for i in range(ext._MEMO_MAX - 2)
+    ]
+    assert len(ext._MEMO) == ext._MEMO_MAX
+    assert shingles.persisted and quant.persisted
+    # hits through the real builders: no build, the memoized frame back
+    assert ext._doc_shingles(spark, d) is shingles
+    assert ext._quantized(spark, d) is quant
+    for i in range(2):  # two misses on a full store
+        ext._memo(spark, ("new", i), _MemoFrame)
+    assert len(ext._MEMO) == ext._MEMO_MAX
+    assert ("stub-app", "shingles", d) in ext._MEMO
+    assert ("stub-app", "quant", d) in ext._MEMO
+    assert not shingles.unpersisted and not quant.unpersisted
+    assert fillers[0].unpersisted and fillers[1].unpersisted
+    assert ("stub-app", "filler", 0) not in ext._MEMO
+    assert not fillers[2].unpersisted
+
+
+def test_memo_nested_build_keeps_bound_and_reset_releases(memo_store):
+    """A build that itself memoizes on a full store (simhash → shingles,
+    oriented → id-oriented edges) leaves exactly ``_MEMO_MAX`` entries
+    and never picks the nested entry as the victim; the reset hook
+    unpersists and empties the store. The hit/miss/eviction counters
+    move by exactly the memo's activity and survive the reset."""
+    ext, spark = memo_store
+    before = ext.memo_stats()
+    for i in range(ext._MEMO_MAX):
+        ext._memo(spark, ("filler", i), _MemoFrame)
+    inner = _MemoFrame()
+
+    def build():
+        assert ext._memo(spark, ("inner",), lambda: inner) is inner
+        assert ext._memo(spark, ("inner",), _MemoFrame) is inner  # a hit
+        return _MemoFrame()
+
+    outer = ext._memo(spark, ("outer",), build)
+    assert len(ext._MEMO) == ext._MEMO_MAX
+    assert list(ext._MEMO)[-2:] == [("stub-app", "inner"), ("stub-app", "outer")]
+    assert not inner.unpersisted and outer.persisted
+    after = ext.memo_stats()
+    assert {k: after[k] - before[k] for k in after} == {
+        "hits": 1,
+        "misses": ext._MEMO_MAX + 2,
+        "evictions": 2,
+    }
+    after["hits"] += 100  # memo_stats returns a copy
+    assert ext.memo_stats()["hits"] == before["hits"] + 1
+    frames = list(ext._MEMO.values())
+    ext.clear_shingle_cache()
+    assert ext._MEMO == {}
+    assert all(f.unpersisted for f in frames)
+    assert ext.memo_stats() == dict(after, hits=before["hits"] + 1)
+
+
+def test_reset_hook_releases_per_call_persists(spark, sf_dir, monkeypatch):
+    """Every persist an op makes is either memoized or tracked, so the
+    reset hook returns the session's persisted-RDD count to where it
+    was — including the ops whose persists were once untracked
+    (text_lang_id, dedup_media_phash, and the flag-gated
+    sample_curriculum / events_rfm_segments paths)."""
+    from cloud2sql_spark.queries.extensions import clear_shingle_cache
+    from cloud2sql_spark.registry import queries
+
+    registry = queries()
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    clear_shingle_cache()
+    prior = persisted()
+    for key in ("text_lang_id", "dedup_media_phash"):
+        registry[key](spark, sf_dir).collect()
+    monkeypatch.setenv("SPARK_GRAFT_APPROX_NTILE", "1")
+    for key in ("sample_curriculum", "events_rfm_segments"):
+        registry[key](spark, sf_dir).collect()
+    assert persisted() > prior
+    clear_shingle_cache()
+    assert persisted() == prior
 
 
 # ------------------------------------------------- _MEAN_MILLI_6DP widening
